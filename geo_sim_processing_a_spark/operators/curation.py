@@ -67,34 +67,35 @@ def _quality_and_split(reps: DataFrame, id_col: str, text_col: str,
     """Steps 2-3 of the curation contract (shared by the exact, fuzzy
     and web front ends): token floor + repetition ceiling computed on
     ``text_col``, then the deterministic content-addressed split keyed
-    on ``split_col`` (defaults to ``text_col``)."""
+    on ``split_col`` (defaults to ``text_col``).
+
+    ``reps`` is read twice (gram stats and the join's probe side).
+    Without the checkpoint (``materialize`` False, or a small frame)
+    each read re-runs its plan, so the input must be deterministic: a
+    plan that can return different rows on a re-run would join stats
+    of one run onto rows of another."""
     from .dedup import _is_big
 
-    # materialize ONCE when the frame is worth it: the survivor frame
-    # feeds BOTH the gram stats subtree and the join's probe side; as a
-    # plan tree the whole upstream (dedup agg / LSH clustering /
-    # web-synth chain) would otherwise execute twice (r6 plan audit:
-    # q_curation_web replayed the documents scan 64x through stacked
-    # re-references).  Size-conditional like the lm/search checkpoints:
-    # the checkpoint blocks count-sink column pruning, so for a SMALL
-    # exact-path frame (Exchange-topped dedup agg — ReusedExchange
-    # already shares the shuffle) it costs more than the replay it
-    # saves (r6 interleaved A/B, count sink, min of 3: exact 1.42 s
-    # no-ckpt vs 1.59 ckpt; fuzzy 1.19 ckpt vs 1.49 no-ckpt — the
-    # fuzzy/web inputs sit behind joins whose stats estimates are big,
-    # so they keep the cut).  ``materialize``: None = auto via _is_big;
-    # callers whose input is Exchange-topped (exact path) pass False —
-    # there ReusedExchange already shares the expensive subtree and the
-    # cut is structurally never worth it (A/B at two sizes in
-    # curate_corpus)
+    # materialize ONCE when the frame is worth it: as a plan tree the
+    # whole upstream (LSH clustering / web-synth chain) would run for
+    # each reader (r6: q_curation_web replayed the documents scan 64x).
+    # The cut blocks count-sink column pruning, so it is size-
+    # conditional (None = auto via _is_big; r6 A/B, min of 3: fuzzy
+    # 1.19 s cut vs 1.49 s not).  The exact path passes False: its
+    # Exchange-topped input is shared by ReusedExchange (plan-gated in
+    # tests/test_plans.py; A/B in curate_corpus)
     reps = reps.withColumn(
         "n_tokens", F.size(F.split(F.col(text_col), " ")).cast("long"))
     if materialize is None:
         materialize = _is_big(reps)
     if materialize:
         reps = reps.localCheckpoint(eager=False)
-    rep = repetition_stats(reps, n=ngram_n, id_col=id_col,
-                           text_col=text_col).select("doc_id", "top_share")
+    # an un-cut frame is Exchange-topped, so AQE already sized it (the
+    # exact path: flooring it cost r6's q_curation 0.75x); a cut keeps
+    # its upstream's partitioning (the fuzzy survivor join: one split)
+    # and takes the floor (without it q_curation_fuzzy ran 1.8x slower)
+    rep = repetition_stats(reps, n=ngram_n, id_col=id_col, text_col=text_col,
+                           ensure_parallelism=materialize).select("doc_id", "top_share")
     out = (reps.join(rep, reps[id_col] == rep["doc_id"])
            .drop(rep["doc_id"])
            .where((F.col("n_tokens") >= min_tokens)
@@ -184,11 +185,8 @@ def curate_web_corpus(docs: DataFrame, id_col: str = "doc_id",
     from .pii import synth_pii_text
     from .urls import synth_messy_urls
 
-    # size-conditional floor on the RAW scan: for big inputs the
-    # regex-heavy synth chain must parallelize before the pages
-    # checkpoint pins the partitioning; for small inputs the floor's
-    # task fan-out costs more than the serial synth (A/B in
-    # _ensure_parallelism_if_big's docstring)
+    # floor the RAW scan: the regex-heavy synth chain must parallelize
+    # before the pages checkpoint pins the partitioning
     d = _ensure_parallelism_if_big(docs.select(id_col, text_col, source_col))
     raw = synth_pages_with_boilerplate(
         synth_pii_text(synth_messy_urls(d, id_col=id_col,

@@ -18,6 +18,7 @@ from splitmix64, not RNG state.
 
 from __future__ import annotations
 
+import re
 import zlib
 
 import numpy as np
@@ -27,6 +28,79 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MERSENNE = (1 << 61) - 1
+
+
+# Physical-tuning policy: the only code that reads a size estimate or a
+# partition count.  Every decision is taken at plan-build time, free.
+
+_UNKNOWN_BYTES = 1 << 50
+
+
+def _size_bytes(df: DataFrame) -> int:
+    """The optimizer's sizeInBytes estimate (no job; exact for cached
+    and checkpointed inputs).  A missing estimate (stats fail, or
+    Spark's Long.MaxValue 'unknown') reads as the 1 PB cap: big, all
+    kernel waves, no floor."""
+    try:
+        size = int(str(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes()))
+    except Exception:  # noqa: BLE001 - stats are best-effort
+        return _UNKNOWN_BYTES
+    return min(size, _UNKNOWN_BYTES)
+
+
+def _is_big(df: DataFrame) -> bool:
+    """Arbiter for the conditional floors/checkpoints (2 MB)."""
+    return _size_bytes(df) >= 2 << 20
+
+
+def _kernel_buckets(df: DataFrame) -> int:
+    """simplify_tiles' bucket count: ~4 MB of geometry per bucket, from
+    one wave of shuffle partitions up to 4.  Several waves even out
+    heterogeneous per-tile cost (~40% idle core-time at 1 task per
+    core, capacity size); small inputs keep one wave (r6: 4 waves cost
+    63 CPU-s of per-task overhead vs 23 at one, same 59k rows)."""
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(p, min(p * 4, -(-_size_bytes(df) // (4 << 20))))
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count ``df`` will run with, without running it (under
+    AQE ``rdd.getNumPartitions()`` runs every shuffle stage upstream):
+    a plan with no Exchange reads its split count (free); an explicit
+    ``repartition(n)`` on top keeps n; any other Exchange gets what AQE
+    coalescing would give it, estimated bytes / advisory size."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    top = re.search(r"Exchange .*", plan)
+    if top is None:
+        return df.rdd.getNumPartitions()
+    explicit = re.search(r"(\d+)\), REPARTITION_BY_NUM", top.group(0))
+    if explicit:
+        return int(explicit.group(1))
+    spark = df.sparkSession
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    return _size_bytes(df) // advisory
+
+
+def _ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Parallelism floor for Python-kernel stages: a one-split scan or a
+    small coalesced shuffle would run the Arrow kernel on a fraction of
+    the cores, so repartition to the default parallelism when the
+    planned partition count is below it (a no-op at scale)."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(df) < p:
+        return df.repartition(p)
+    return df
+
+
+def _ensure_parallelism_if_big(df: DataFrame) -> DataFrame:
+    """Floor for JVM-scalar chains, big inputs only: for small ones the
+    fan-out costs more than the serial scan work it saves (r6 A/B on
+    curate_web_corpus: 3.9 s floored vs 2.7 s not at sf0.1, 6-7 s vs
+    10 s at sf1.0).  Python-kernel stages floor at any size."""
+    return _ensure_parallelism(df) if _is_big(df) else df
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -47,54 +121,13 @@ def _shingle_hashes(text: str, n: int) -> np.ndarray:
     # (260k, n_hashes) uint64 matrix is memory-bound — 0.13s -> 0.76s
     # for the permutation step at sf0.1) and reverted; the actual
     # q_minhash cost is Spark-side parallelism, fixed in
-    # _ensure_parallelism below.
+    # _ensure_parallelism.
     toks = text.lower().split()
     if len(toks) < n:
         toks = toks + [""] * (n - len(toks))
     return np.array(sorted({zlib.crc32(" ".join(toks[i:i + n]).encode("utf-8"))
                             for i in range(max(1, len(toks) - n + 1))}),
                     dtype=np.uint64)
-
-
-def _ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Python-kernel stages (signature UDFs) want at least one task per
-    core: a small parquet input arrives as ONE split and would run the
-    whole Arrow kernel single-threaded.  Repartition only when the scan
-    is narrower than ``target`` (default parallelism) — a no-op at
-    scale, where inputs carry orders of magnitude more splits than
-    cores.  Shared by dedup/text/skeleton/driver-query kernels."""
-    if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def _is_big(df: DataFrame, min_bytes: int = 2 << 20) -> bool:
-    """Free size arbiter for the conditional tuning helpers below: the
-    optimizer's sizeInBytes estimate (no job).  Unknown size counts as
-    big — at scale the floors/checkpoints are the safe default."""
-    try:
-        size = int(str(df._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes()))
-    except Exception:  # noqa: BLE001 - stats are best-effort
-        size = 1 << 60
-    return size >= min_bytes
-
-
-def _ensure_parallelism_if_big(df: DataFrame, min_bytes: int = 2 << 20,
-                               target: int | None = None) -> DataFrame:
-    """Conditional parallelism floor for JVM-scalar chains: for SMALL
-    inputs the task fan-out a repartition multiplies across every
-    downstream stage costs more than the serial scan work it saves
-    (r6 A/B on curate_web_corpus: floor 3.9 s vs no-floor 2.7 s at
-    sf0.1, but no-floor 10 s vs floor 6-7 s at sf1.0).  The
-    optimizer's sizeInBytes estimate (free) arbitrates; Python-kernel
-    stages should keep the unconditional _ensure_parallelism — their
-    per-row cost dwarfs task overhead at any size."""
-    if not _is_big(df, min_bytes):
-        return df
-    return _ensure_parallelism(df, target)
 
 
 def _perm_params(n_hashes: int):

@@ -72,15 +72,11 @@ def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
     """
     from .dedup import _ensure_parallelism, _is_big
 
-    # size-conditional tuning (the curate_web A/B pattern): for a BIG
-    # corpus, floor the scan parallelism (single-split scans would
-    # tokenize on one task) and materialize the token stream ONCE —
-    # three plan branches consume it (vocab count, vocab table, bigram
-    # lag) and as a plan tree each would re-run the tokenize/explode.
-    # For a SMALL corpus both hurt: the floor shuffles the raw text a
-    # count-pruned plan barely touches, and the checkpoint blocks
-    # column pruning (A/B at sf0.1: 2.7 s with both vs 1.0 s without;
-    # the 10x corpus flips the sign).
+    # size-conditional: a BIG corpus gets the floor and ONE token
+    # stream for its three readers (vocab count, vocab table, bigram
+    # lag); for a SMALL one the floor shuffles text a count-pruned plan
+    # barely reads and the cut blocks column pruning (A/B at sf0.1:
+    # 2.7 s with both vs 1.0 s without; the 10x corpus flips the sign)
     big = _is_big(docs)
     toks = _tokens_with_pos(
         _ensure_parallelism(docs) if big else docs, id_col, text_col)

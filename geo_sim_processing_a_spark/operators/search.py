@@ -48,10 +48,7 @@ def bm25_search(docs: DataFrame, query_terms: list[str], k: int = 20,
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = sorted(set(query_terms))
-    # size-conditional floor + checkpoint (the lm.py A/B: both hurt a
-    # small corpus — the floor shuffles raw text, the checkpoint blocks
-    # column pruning — and both win once the corpus outgrows task
-    # overhead)
+    # size-conditional floor + checkpoint: see bigram_lm_score
     big = _is_big(docs)
     toks = ((_ensure_parallelism(docs) if big else docs).select(
         F.col(id_col).alias("_id"),
@@ -124,8 +121,6 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
     if max_df is not None and max_df < min_df:
         raise ValueError(f"max_df {max_df} < min_df {min_df}")
     from .dedup import _ensure_parallelism_if_big
-    # size-conditional floor (see bm25_search): a small corpus pays
-    # more for the fan-out shuffle than the serial posexplode costs
     toks = (_ensure_parallelism_if_big(docs).select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.trim(F.col(text_col)), WS_CLASS + "+"))

@@ -49,8 +49,7 @@ def brute_topk(vectors: DataFrame, queries: DataFrame, k: int,
     side is broadcast (small); ranking is a window per query; ties by
     vec_id.  All JVM-side."""
     from .dedup import _ensure_parallelism
-    # parallelism floor: a single-split vector scan would score every
-    # (vector, query) pair on one task (r6: 47 s serial at sf1.0)
+    # floored: one split scored every pair on one task (r6: 47 s at sf1.0)
     joined = _ensure_parallelism(vectors).crossJoin(F.broadcast(queries))
     scored = joined.withColumn(
         "cos", _cosine(F.col(vec_col), F.col(qvec_col)))
@@ -139,8 +138,7 @@ def ivf_build_assignments(vectors: DataFrame, dim: int, n_lists: int = 16,
     is ONE pass with no count() job and no full sort — works unchanged
     on filtered/derived inputs where a count() would be a full scan."""
     from .dedup import _ensure_parallelism
-    vectors = _ensure_parallelism(vectors)  # single-split scans would
-    # run the assignment kernel (and the re-rank feed) on one task
+    vectors = _ensure_parallelism(vectors)
     sample = np.array(
         [r[0] for r in vectors
          .orderBy(F.xxhash64(F.col(id_col)), id_col).limit(sample_n)
@@ -210,8 +208,7 @@ def lsh_self_near_dup(vectors: DataFrame, dim: int, threshold: float = 0.95,
     bucket = lsh_bucket_udf(dim, n_planes)
     # local-checkpointed: the bucket UDF would otherwise re-run over
     # the full vector table for the guard's stats pass AND both join
-    # sides (see dedup.minhash_lsh_pairs for the trade-off note);
-    # parallelism floor first — single-split scans would bucket serially
+    # sides (see dedup.minhash_lsh_pairs for the trade-off note)
     b = (_ensure_parallelism(vectors)
          .withColumn("bucket", bucket(F.col(vec_col)))
          .localCheckpoint(eager=False))

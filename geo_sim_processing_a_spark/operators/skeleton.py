@@ -75,8 +75,7 @@ def _polygon_rows(url: str, rings: list, correction: bool, out: dict) -> None:
         out["error"].append(err)
 
 
-def chordal_axis_frame(polys: DataFrame, correction: bool = True,
-                       n_parts: int | None = None) -> DataFrame:
+def chordal_axis_frame(polys: DataFrame, correction: bool = True) -> DataFrame:
     """polys(url, xs, ys[, ring_offsets]) -> per-part geometry rows for
     both layers.
 
@@ -121,7 +120,7 @@ def chordal_axis_frame(polys: DataFrame, correction: bool = True,
     from .dedup import _ensure_parallelism
 
     cols = ["url", "xs", "ys"] + (["ring_offsets"] if has_offsets else [])
-    sel = _ensure_parallelism(polys.select(*cols), target=n_parts)
+    sel = _ensure_parallelism(polys.select(*cols))
 
     def run(batches):
         for pdf in batches:

@@ -73,11 +73,8 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 8) -> DataFrame:
     semantics — points inside a hole do NOT match."""
     from .dedup import _ensure_parallelism_if_big
     enc = encode_cell_udf(res)
-    # size-conditional parallelism floor: a single-split point scan of
-    # a BIG table would run the cell-encode UDF (and the downstream
-    # refine feed) on one task; for a small one the fan-out exchange
-    # costs more than the light encode it parallelizes (count-sink A/B
-    # at sf0.1: 1.31 s floored vs 0.81 s not)
+    # size-conditional floor: a small point table pays more for the
+    # fan-out than the light encode costs (sf0.1: 1.31 s floored vs 0.81)
     pts = (_ensure_parallelism_if_big(points)
            .withColumn("cell", enc("lon", "lat")))
     has_offsets = "ring_offsets" in polys.columns
@@ -203,7 +200,6 @@ def knn_join(points: DataFrame, k: int, res: int = 6,
     cell_h = 180.0 / (1 << res)
     exact_radius2 = min(cell_w, cell_h) ** 2
     enc = encode_cell_udf(res)
-    # size-conditional parallelism floor: see pip_join
     pts = (_ensure_parallelism_if_big(points)
            .withColumn("cell", enc("lon", "lat")))
 
@@ -453,10 +449,8 @@ def diamond_join(left: DataFrame, right: DataFrame, res: int = 6,
     sc = float(scale)
     _require_integral(left, ["acx", "acy", "aw", "ah"], "diamond_join")
     _require_integral(right, ["bcx", "bcy", "bw", "bh"], "diamond_join")
-    # small scans arrive as ONE split; the refine predicate then runs
-    # single-task however many candidate rows the cell join fans out
-    # (round-5: 18+ s wall vs ~1 CPU busy).  No-op at scale, where the
-    # inputs carry more splits than cores.
+    # floored: the refine predicate ran single-task on one-split scans
+    # (round-5: 18+ s wall vs ~1 CPU busy)
     left = _ensure_parallelism(left)
     right = _ensure_parallelism(right)
     la = left.select(
@@ -534,7 +528,6 @@ def segment_join(left: DataFrame, right: DataFrame, res: int = 6,
     sc = float(scale)
     _require_integral(left, ["ax1", "ay1", "ax2", "ay2"], "segment_join")
     _require_integral(right, ["bx1", "by1", "bx2", "by2"], "segment_join")
-    # see diamond_join: probe-side parallelism floor for small scans
     left = _ensure_parallelism(left)
     right = _ensure_parallelism(right)
 

@@ -322,10 +322,8 @@ def repetition_stats(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     Two-level hash-agg — (doc, gram) counts then per-doc max/sum — both
     partial-aggregated map-side; no UDF anywhere."""
     from .dedup import _ensure_parallelism
-    # callers whose input is already a small materialized survivor
-    # frame (the curation compositions) pass ensure_parallelism=False:
-    # re-flooring a few hundred checkpointed rows only multiplies task
-    # fan-out (r6 A/B)
+    # the curation compositions pass ensure_parallelism=False: flooring
+    # their small survivor frame only multiplies task fan-out (r6 A/B)
     if ensure_parallelism:
         docs = _ensure_parallelism(docs)
     g = docs.select(F.col(id_col).alias("doc_id"),
@@ -483,9 +481,6 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int, overlap: int = 0,
         raise ValueError(
             f"overlap must be in [0, chunk_tokens), got {overlap}")
     stride = chunk_tokens - overlap
-    # size-conditional floor: the scan-stage chunk build of a big
-    # corpus wants one task per core; a small one pays more for the
-    # fan-out than the serial build costs (lm.py A/B pattern)
     from .dedup import _ensure_parallelism_if_big
     docs = _ensure_parallelism_if_big(docs)
     # NULL text behaves like empty text (one empty chunk) instead of

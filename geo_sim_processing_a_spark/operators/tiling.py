@@ -101,17 +101,18 @@ def with_cell_cover(geoms: DataFrame, res: int) -> DataFrame:
 
 def salt_by_cell(df: DataFrame, key_col: str = "url", cell_col: str = "cell",
                  target_rows_per_task: int = 20_000,
-                 replicate_context: bool = True,
                  broadcast_counts: bool = True) -> DataFrame:
-    """Two-pass skew salting; adds ``salt`` and repartitions on
-    (cell, salt).
+    """Two-pass skew salting; adds ``salt`` (the kernel stage,
+    plans/pipeline.simplify_tiles, owns the (cell, salt) shuffle).
 
-    With ``replicate_context`` (required for interacting kernels like
-    Sherbend, SURVEY.md §4.3.2): every row of a hot cell is REPLICATED
-    to each salt replica as read-only context, and ``is_owner`` stays
-    true only in the row's home salt — each replica sees the full
-    constraint context, outputs stay exact, and ownership is disjoint.
-    Independent-feature kernels (DP/VW) can skip replication.
+    Every row of a hot cell is REPLICATED to each salt replica as
+    read-only context, and ``is_owner`` stays true only in the row's
+    home salt — each replica sees the full constraint context that an
+    interacting kernel like Sherbend needs (SURVEY.md §4.3.2), outputs
+    stay exact, and ownership is disjoint.  Independent-feature kernels
+    (dp/vw) need no context: simplify_tiles drops their non-owner rows
+    before its shuffle.  Frames without ``is_owner`` get the home salt
+    only.
 
     ``broadcast_counts`` (default True) hints the per-cell counts join:
     correct for coarse grids where the count table is bounded by the
@@ -130,7 +131,7 @@ def salt_by_cell(df: DataFrame, key_col: str = "url", cell_col: str = "cell",
               .withColumn("n_salt", F.coalesce(F.col("n_salt"), F.lit(1)))
               .withColumn("home_salt",
                           F.pmod(F.xxhash64(F.col(key_col)), F.col("n_salt")).cast("int")))
-    if replicate_context and "is_owner" in df.columns:
+    if "is_owner" in df.columns:
         salted = (base
                   .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1)))
                   .withColumn("salt", F.col("salt").cast("int"))
@@ -138,8 +139,6 @@ def salt_by_cell(df: DataFrame, key_col: str = "url", cell_col: str = "cell",
                               F.col("is_owner") & (F.col("salt") == F.col("home_salt"))))
     else:
         salted = base.withColumn("salt", F.col("home_salt"))
-    # no repartition here: the kernel stage owns the single
-    # (cell, salt) shuffle (plans/pipeline.simplify_tiles)
     return salted.drop("n_salt", "home_salt")
 
 

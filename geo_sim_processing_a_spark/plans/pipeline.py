@@ -22,6 +22,7 @@ from ..geom.epsilon import Epsilon
 from ..kernels import reduce_bend as RBK
 from ..kernels.simplify import simplify_feature
 from ..operators import cells as C
+from ..operators.dedup import _kernel_buckets
 from ..operators.tiling import salt_by_cell, with_cell_cover
 from ..sources import manifest as MF
 from ..sources.pages import extract_text_series, synthesize_geoms_pdf
@@ -296,7 +297,7 @@ def _dp_kernel(pdf: pd.DataFrame, tolerance: float, method: str) -> pd.DataFrame
 
 def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
                    kernel: str = "sherbend", smooth: bool = False,
-                   n_buckets: int | None = None, epsilon=WORLD_EPS,
+                   epsilon=WORLD_EPS,
                    flag_del_outer: bool = False,
                    flag_del_inner: bool = False) -> DataFrame:
     """Per-tile kernels over halo-complete tiles.
@@ -305,7 +306,14 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
     (cell, salt) tiles and the kernel iterates them as numpy slices —
     per-group Arrow/pandas overhead is paid per bucket, not per tile.
     Tile semantics are unchanged: each (cell, salt) subgroup is
-    processed independently, owners only are emitted."""
+    processed independently, owners only are emitted.
+
+    Sherbend reads every row of a tile as context (halo copies and the
+    hot-cell replicas of salt_by_cell); dp/vw simplify each owned
+    feature alone, so their non-owner rows are dropped before the
+    shuffle — after dedup._kernel_buckets has sized it from the input."""
+    has_salt = "salt" in geoms_with_cells.columns
+    n_buckets = _kernel_buckets(geoms_with_cells)
     if kernel == "sherbend":
         def bucket_fn(pdf):
             return _reduce_bend_kernel(pdf, diameter_tol, smooth, epsilon=epsilon,
@@ -314,32 +322,7 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
     else:
         def bucket_fn(pdf):
             return _dp_kernel(pdf, diameter_tol, kernel)
-
-    has_salt = "salt" in geoms_with_cells.columns
-    spark = geoms_with_cells.sparkSession
-    if n_buckets is None:
-        # SIZE-ADAPTIVE bucket count (guide §2: partitioning must not
-        # be a constant tuned for one scale).  Big inputs get several
-        # waves of tasks (per-tile kernel cost is heterogeneous, so
-        # more-tasks-than-cores evens out stragglers — measured ~40%
-        # idle core-time with 1 task per core at capacity size), but a
-        # fixed P*4 at SMALL inputs pays ~0.4 CPU-s of per-task
-        # JVM+Python overhead for sub-ms buckets (r6: the transport-
-        # only stage cost 63 CPU-s at 128 buckets vs 23 at 32 for the
-        # same 59k rows).  The optimizer's sizeInBytes estimate is
-        # free (no extra job; exact for cached inputs) and sets the
-        # wave count: ~4 MB of geometry per bucket, floored at one
-        # full wave, capped at 4 waves.
-        p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        try:
-            size = int(str(geoms_with_cells._jdf.queryExecution()
-                           .optimizedPlan().stats().sizeInBytes()))
-        except Exception:  # noqa: BLE001 - stats are best-effort
-            size = 0
-        if 0 < size < (1 << 50):  # a real estimate, not the unknown cap
-            n_buckets = max(p, min(p * 4, -(-size // (4 << 20))))
-        else:
-            n_buckets = p * 4
+        geoms_with_cells = geoms_with_cells.where(F.col("is_owner"))
 
     # ONE shuffle: hash-partition by (cell, salt) — every tile lands
     # wholly in one partition — then run the kernel with mapInPandas,
@@ -584,14 +567,16 @@ def _run_pipeline_body(spark, covered, out_dir, res, diameter_tol, kernel,
     # tiles and a driver-side collect would be the bottleneck)
     import time as _time
     new_data = spark.read.parquet(f"{out_dir}/data/stage={stage}/attempt={attempt}")
-    # counters are per-(cell, salt) SUBGROUP totals replicated onto each
-    # of the subgroup's rows: take one value per subgroup, then SUM the
-    # additive ones across salts (a plain per-cell max under-reported
-    # hot salted cells by all but the largest subgroup)
+    # Sherbend counters are per-(cell, salt) SUBGROUP totals replicated
+    # onto each of the subgroup's rows: take one value per subgroup,
+    # then SUM the additive ones across salts (a plain per-cell max
+    # under-reported hot salted cells by all but the largest subgroup).
+    # dp/vw count escaped holes per feature: sum them.
+    hole = F.first if kernel == "sherbend" else F.sum
     per_salt = (new_data.groupBy("cell", "salt")
                 .agg(F.count("*").alias("nf"),
                      F.first("n_bend_reduced").alias("s_bend"),
-                     F.first("n_hole_del").alias("s_hole"),
+                     hole("n_hole_del").alias("s_hole"),
                      F.first("n_line_smooth").alias("s_smooth"),
                      F.first("n_pass").alias("s_pass"),
                      F.first("n_pol_del").alias("s_pol"),

@@ -200,10 +200,10 @@ def test_contamination_broadcasts_probe_grams(spark):
 def test_curation_udf_free_mapside_dedup(spark):
     """The whole curation composition stays JVM-side, and the exact
     dedup is a partial-aggregated min_by (map-side combine), not a
-    window sort over every row.  Since r6 the composition cuts its
-    plan at reuse points (localCheckpoint — one execution per shared
-    subtree), so the min_by assertion runs on the dedup stage's own
-    plan; the composition plan is checked UDF/Window-free."""
+    window sort over every row.  The min_by assertion runs on the
+    dedup stage's own plan (the fuzzy and web compositions may cut
+    their plan with a localCheckpoint, which hides it); the
+    composition plan is checked UDF/Window-free."""
     from geo_sim_processing_a_spark.operators.curation import dedup_reps
     from geo_sim_processing_a_spark.plans.driver_queries import q_curation
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -213,6 +213,89 @@ def test_curation_udf_free_mapside_dedup(spark):
     plan = plan_of(q_curation(spark, SF_DIR))
     assert "EvalPython" not in plan
     assert "Window" not in plan
+
+
+def test_curation_reuses_dedup_exchange(spark):
+    """The exact curation path skips the survivor checkpoint
+    (materialize=False) because its two readers of the dedup frame share
+    ONE shuffle: the final adaptive plan must show the dedup exchange
+    reused, not run twice."""
+    from geo_sim_processing_a_spark.plans.driver_queries import q_curation
+    df = q_curation(spark, SF_DIR)
+    df.collect()  # runs df's own adaptive plan to its final form
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan, plan
+    # the min_by partial buffer marks the dedup aggregate's exchange
+    reused = [l for l in plan.splitlines() if "ReusedExchange" in l]
+    assert any("valueWithExtremumOrdering" in l for l in reused), plan
+
+
+# ---------------------------------------------------------------------------
+# the physical-tuning policy (operators/dedup.py): free probes
+# ---------------------------------------------------------------------------
+
+def _jobs_run_by(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tuning_probes_run_no_jobs(spark):
+    """The size probe and the parallelism floor decide at plan-build
+    time without running a job, on a groupBy frame and on a join frame
+    (rdd.getNumPartitions() runs the upstream shuffle stages there)."""
+    from geo_sim_processing_a_spark.operators.dedup import (
+        _ensure_parallelism, _size_bytes)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    frames = {
+        "group": docs.groupBy((F.col("doc_id") % 7).alias("k")).count(),
+        "join": docs.join(docs.select("doc_id", F.col("text").alias("t2")),
+                          "doc_id"),
+    }
+    for name, df in frames.items():
+        assert "Exchange" in plan_of(df), name
+        for probe in (_size_bytes, _ensure_parallelism):
+            n = _jobs_run_by(spark, f"probe_{name}_{probe.__name__}",
+                             lambda: probe(df))
+            assert n == 0, (name, probe.__name__, n)
+
+
+def test_tuning_table_pins_parent_values(spark):
+    """_is_big and the kernel bucket count for a known estimate, a 0
+    estimate and a missing one (Spark's Long.MaxValue 'unknown')."""
+    from geo_sim_processing_a_spark.operators.dedup import (
+        _is_big, _kernel_buckets, _size_bytes)
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    known = spark.range(6 << 20)             # 48 MB estimate
+    zero = spark.range(0)                    # 0 B: a known empty frame
+    missing = spark.createDataFrame([(1,)], "a long")
+    assert _size_bytes(known) == 48 << 20
+    assert _size_bytes(zero) == 0
+    assert _size_bytes(missing) == 1 << 50   # unbounded
+    assert [_is_big(f) for f in (known, zero, missing)] == [True, False, True]
+    # 48 MB / 4 MB per bucket = 12 buckets, within [p, 4p]; a missing
+    # estimate gets 4 waves.  A 0 estimate is an empty frame: one wave
+    # (the old private probe in simplify_tiles read 0 as unknown, 4p).
+    assert [_kernel_buckets(f) for f in (known, zero, missing)] == [
+        max(p, min(4 * p, 12)), p, 4 * p]
+
+
+def test_floor_never_lowers_scan_partitions(spark):
+    """A scan's split count is read as is: the floor raises a narrow
+    scan to the default parallelism and leaves a wide one alone."""
+    from geo_sim_processing_a_spark.operators.dedup import _ensure_parallelism
+    p = spark.sparkContext.defaultParallelism
+    scans = [spark.read.parquet(f"{SF_DIR}/documents.parquet"),
+             spark.range(0, 1000, 1, 1),
+             spark.range(0, 1000, 1, p + 3)]
+    for df in scans:
+        n = df.rdd.getNumPartitions()
+        assert (_ensure_parallelism(df).rdd.getNumPartitions()
+                == max(n, p)), n
 
 
 # ---------------------------------------------------------------------------

@@ -58,13 +58,16 @@ def _collect_output(df):
                   for r in rows)
 
 
-def test_salting_does_not_change_output(spark, pages):
-    """G5.4 — salted run output == unsalted run output, exactly."""
+@pytest.mark.parametrize("kernel", ["sherbend", "dp"])
+def test_salting_does_not_change_output(spark, pages, kernel):
+    """G5.4 — salted run output == unsalted run output, exactly: for
+    Sherbend, which reads the replicated context, and for dp, whose
+    non-owner rows simplify_tiles drops before the shuffle."""
     geoms = pages_to_geoms(pages)
     covered = with_cell_cover(geoms, RES).cache()
-    unsalted = simplify_tiles(covered, TOL, "sherbend")
+    unsalted = simplify_tiles(covered, TOL, kernel)
     salted = simplify_tiles(
-        salt_by_cell(covered, target_rows_per_task=20), TOL, "sherbend")
+        salt_by_cell(covered, target_rows_per_task=20), TOL, kernel)
     assert _collect_output(unsalted) == _collect_output(salted)
     covered.unpersist()
 
@@ -156,3 +159,38 @@ def test_dp_kernel_path(spark, pages):
     out = simplify_tiles(covered, 0.001, "dp")
     agg = out.agg(F.sum("n_in").alias("i"), F.sum("n_out").alias("o")).collect()[0]
     assert agg["o"] <= agg["i"]
+
+
+def test_manifest_sums_dp_hole_counters(spark, tmp_path):
+    """dp counts escaped holes per FEATURE: a tile where two owned
+    polygons each lose one hole records 2 in the manifest, not the
+    first() of the per-feature values."""
+    import json
+
+    from geo_sim_processing_a_spark.plans.pipeline import (
+        WORLD_EPS, _run_pipeline_body)
+    from geo_sim_processing_a_spark.sources import manifest as MF
+
+    def polygon(x0):
+        # the outer ring's 0.05-deep bump goes under the 0.1 tolerance;
+        # the hole inside the bump then lies outside the simplified ring
+        outer = [(x0, 1.0), (x0 + 0.5, 0.95), (x0 + 1, 1.0), (x0 + 1, 2.0),
+                 (x0, 2.0), (x0, 1.0)]
+        hole = [(x0 + 0.48, 0.97), (x0 + 0.52, 0.97), (x0 + 0.52, 0.99),
+                (x0 + 0.48, 0.99), (x0 + 0.48, 0.97)]
+        pts = outer + hole
+        return (f"u{x0}", 0, 2, [p[0] for p in pts], [p[1] for p in pts],
+                [0, len(outer)])
+
+    geoms = spark.createDataFrame(
+        [polygon(1.0), polygon(3.0)],
+        "url string, h long, kind tinyint, xs array<double>, "
+        "ys array<double>, ring_offsets array<int>")
+    covered = with_cell_cover(geoms, RES)
+    out = str(tmp_path / "run")
+    got = _run_pipeline_body(spark, covered, out, RES, 0.1, "dp", False,
+                             20_000, "simplify", WORLD_EPS)
+    assert got["geoms"] == 2
+    rows = spark.read.parquet(MF.manifest_path(out)).collect()
+    assert len(rows) == 1  # both polygons are owned by one tile
+    assert json.loads(rows[0]["counters"])["n_hole_del"] == 2
