@@ -1,4 +1,4 @@
-.PHONY: test verify bench scaling capacity dist plans lint
+.PHONY: test verify bench bench-ab scaling capacity dist plans lint
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
@@ -8,6 +8,13 @@ verify:
 
 bench:
 	python bench.py
+
+# interleaved parent/change pairs of perfbench/run.py (tools/perfbench_ab.sh)
+PARENT ?= HEAD
+WORKLOAD ?= tiles_dp_hotspot
+PAIRS ?= 10
+bench-ab:
+	tools/perfbench_ab.sh $(PARENT) $(WORKLOAD) $(PAIRS)
 
 scaling:
 	python tools/bench_scaling.py 480000 2

@@ -54,14 +54,37 @@ def _is_big(df: DataFrame) -> bool:
     return _size_bytes(df) >= 2 << 20
 
 
+# Python-kernel stages are sized in whole waves of the cores
+# (defaultParallelism), never in shuffle partitions: every Python task
+# pays a fixed worker set-up cost before any user code runs (~0.3 CPU-s
+# and ~0.3 s wall on a 4-vCPU VM, PySpark 4.1), so a task beyond what
+# keeps the cores busy buys nothing.  One Python task per ~4 MB.
+_PYTHON_TASK_BYTES = 4 << 20
+
+
+def _wave(df: DataFrame) -> int:
+    """One wave of Python tasks: one per core."""
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
 def _kernel_buckets(df: DataFrame) -> int:
-    """simplify_tiles' bucket count: ~4 MB of geometry per bucket, from
-    one wave of shuffle partitions up to 4.  Several waves even out
-    heterogeneous per-tile cost (~40% idle core-time at 1 task per
-    core, capacity size); small inputs keep one wave (r6: 4 waves cost
-    63 CPU-s of per-task overhead vs 23 at one, same 59k rows)."""
-    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return max(p, min(p * 4, -(-_size_bytes(df) // (4 << 20))))
+    """simplify_tiles' bucket count: one per ~4 MB of geometry, from
+    one wave up to 4.  Several waves even out heterogeneous per-tile
+    cost (~40% idle core-time at 1 task per core, capacity size); small
+    inputs keep one wave (r6: 4 waves cost 63 CPU-s of per-task
+    overhead vs 23 at one, same 59k rows)."""
+    p = _wave(df)
+    return max(p, min(p * 4, -(-_size_bytes(df) // _PYTHON_TASK_BYTES)))
+
+
+def _coalesce_to_waves(df: DataFrame) -> DataFrame:
+    """Narrow the input of a one-pass Python stage (run_pipeline's
+    PREP) to whole waves: one for a small input, never fewer than one
+    task per ~4 MB for a large one.  A coalesce only merges
+    partitions: it adds no shuffle and never raises the count."""
+    p = _wave(df)
+    tasks = -(-_size_bytes(df) // _PYTHON_TASK_BYTES)
+    return df.coalesce(p * max(1, -(-tasks // p)))
 
 
 def _planned_partitions(df: DataFrame) -> int:
@@ -89,7 +112,7 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     small coalesced shuffle would run the Arrow kernel on a fraction of
     the cores, so repartition to the default parallelism when the
     planned partition count is below it (a no-op at scale)."""
-    p = df.sparkSession.sparkContext.defaultParallelism
+    p = _wave(df)
     if _planned_partitions(df) < p:
         return df.repartition(p)
     return df

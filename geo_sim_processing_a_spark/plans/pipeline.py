@@ -22,7 +22,7 @@ from ..geom.epsilon import Epsilon
 from ..kernels import reduce_bend as RBK
 from ..kernels.simplify import simplify_feature
 from ..operators import cells as C
-from ..operators.dedup import _kernel_buckets
+from ..operators.dedup import _coalesce_to_waves, _kernel_buckets
 from ..operators.tiling import salt_by_cell, with_cell_cover
 from ..sources import manifest as MF
 from ..sources.pages import extract_text_series, synthesize_geoms_pdf
@@ -83,27 +83,28 @@ def extracted_text_parity(pages: DataFrame) -> DataFrame:
                         (extract_udf("html") == F.col("text")).alias("ok"))
 
 
+def _url_hashes(pages: DataFrame) -> DataFrame:
+    """(url, h): h is computed JVM-side (xxhash64 of the doc id parsed
+    from the url) so Catalyst prunes/pushes around it.  Spark cannot
+    column-prune INTO mapInPandas: without the select the corpus's
+    biggest columns (html, text) would round-trip JVM->Arrow->Python
+    just to be dropped."""
+    return (pages
+            .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
+            .withColumn("h", F.xxhash64("doc_id"))
+            .select("url", "h"))
+
+
 def pages_to_geoms(pages: DataFrame) -> DataFrame:
     """P10 — geocode pages into multi-ring geometry rows (points,
     footprint polygons for pmod(h,7)==0 — holed when pmod(h,21)==0 —
-    and trace polylines for pmod(h,3)==0).
-
-    h is computed JVM-side (xxhash64 of the doc id parsed from the
-    url) so Catalyst prunes/pushes around it; the geometry synthesis is
+    and trace polylines for pmod(h,3)==0); the geometry synthesis is
     one batch-vectorized Arrow kernel (sources/pages.py)."""
-    with_h = (pages
-              .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
-              .withColumn("h", F.xxhash64("doc_id"))
-              # Spark cannot column-prune INTO mapInPandas: without this
-              # select the corpus's biggest columns (html, text) would
-              # round-trip JVM->Arrow->Python just to be dropped
-              .select("url", "h"))
-
     def gen(batches):
         for pdf in batches:
             yield synthesize_geoms_pdf(pdf["url"].to_numpy(), pdf["h"].to_numpy())
 
-    return with_h.mapInPandas(gen, GEOM_SCHEMA)
+    return _url_hashes(pages).mapInPandas(gen, GEOM_SCHEMA)
 
 
 def pages_to_covered_geoms(pages: DataFrame, res: int) -> DataFrame:
@@ -111,21 +112,18 @@ def pages_to_covered_geoms(pages: DataFrame, res: int) -> DataFrame:
     Arrow stage.  Chaining two mapInPandas stages inside one task runs
     two Python workers per core (measured 3-10x wall regression at
     local[32] from the oversubscription); fusing keeps exactly one
-    Python worker per task and halves the Arrow transport."""
+    Python worker per task and halves the Arrow transport.  The input
+    is coalesced to whole waves of cores (dedup._coalesce_to_waves),
+    not left at the shuffle-partition count of an upstream dedup."""
     from ..operators.tiling import _cover_batch
-
-    with_h = (pages
-              .withColumn("doc_id", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long"))
-              .withColumn("h", F.xxhash64("doc_id"))
-              # prune BEFORE the Arrow boundary (see pages_to_geoms)
-              .select("url", "h"))
 
     def gen(batches):
         for pdf in batches:
             geoms = synthesize_geoms_pdf(pdf["url"].to_numpy(), pdf["h"].to_numpy())
             yield _cover_batch(geoms, res)
 
-    return with_h.mapInPandas(gen, GEOM_SCHEMA + ", cell long, is_owner boolean")
+    return _coalesce_to_waves(_url_hashes(pages)).mapInPandas(
+        gen, GEOM_SCHEMA + ", cell long, is_owner boolean")
 
 
 # ---------------------------------------------------------------------------
@@ -302,16 +300,18 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
                    flag_del_inner: bool = False) -> DataFrame:
     """Per-tile kernels over halo-complete tiles.
 
-    Tiles are BUCKETED before applyInPandas: one Spark group holds many
-    (cell, salt) tiles and the kernel iterates them as numpy slices —
-    per-group Arrow/pandas overhead is paid per bucket, not per tile.
-    Tile semantics are unchanged: each (cell, salt) subgroup is
-    processed independently, owners only are emitted.
+    Tiles are BUCKETED: one (cell, salt)-hashed partition holds many
+    tiles and the kernel iterates them as numpy slices — per-batch
+    Arrow/pandas overhead is paid per bucket, not per tile.  The bucket
+    count is dedup._kernel_buckets: one to four waves of cores (not of
+    shuffle partitions), one bucket per ~4 MB of input.  Tile semantics
+    are unchanged: each (cell, salt) subgroup is processed
+    independently, owners only are emitted.
 
     Sherbend reads every row of a tile as context (halo copies and the
     hot-cell replicas of salt_by_cell); dp/vw simplify each owned
     feature alone, so their non-owner rows are dropped before the
-    shuffle — after dedup._kernel_buckets has sized it from the input."""
+    shuffle — after the bucket count is sized from the input."""
     has_salt = "salt" in geoms_with_cells.columns
     n_buckets = _kernel_buckets(geoms_with_cells)
     if kernel == "sherbend":
@@ -332,7 +332,7 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
     # The partition-local sort makes each tile's rows CONTIGUOUS, so
     # the Python worker holds at most (current tile + one Arrow batch)
     # in memory — salting bounds a TILE (~2x target_rows_per_task), but
-    # nothing bounds a PARTITION (~total/(4P) rows: gathering it whole,
+    # nothing bounds a PARTITION (~total/n_buckets rows: gathering it whole,
     # as this stage originally did, OOMs the worker once rows-per-
     # partition outgrow memory at scale).  Tungsten sort spills to disk;
     # per-tile outputs are unchanged (the kernel re-sorts each bucket

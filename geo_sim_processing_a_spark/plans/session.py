@@ -4,7 +4,9 @@ scale-oriented conf.
 Settings chosen for 100 TB-scale behavior and verified locally:
  - AQE on (coalesce + skew-join backstop behind our explicit salting)
  - Arrow transport for every pandas UDF (the only Python boundary)
- - shuffle partitions sized to cores
+ - shuffle partitions max(cores, 8) by default (JVM stages; the
+   Python-kernel stages size themselves in waves of cores, see the
+   tuning block in operators/dedup.py)
 
 This factory hardcodes master=local[N] (builder-set properties BEAT
 spark-submit flags, so it is NOT the cluster entrypoint): a cluster

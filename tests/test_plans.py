@@ -245,11 +245,12 @@ def _jobs_run_by(spark, group, fn):
 
 
 def test_tuning_probes_run_no_jobs(spark):
-    """The size probe and the parallelism floor decide at plan-build
-    time without running a job, on a groupBy frame and on a join frame
-    (rdd.getNumPartitions() runs the upstream shuffle stages there)."""
+    """The size probe, the parallelism floor and the Python-stage
+    widths decide at plan-build time without running a job, on a
+    groupBy frame and on a join frame (rdd.getNumPartitions() runs the
+    upstream shuffle stages there)."""
     from geo_sim_processing_a_spark.operators.dedup import (
-        _ensure_parallelism, _size_bytes)
+        _coalesce_to_waves, _ensure_parallelism, _kernel_buckets, _size_bytes)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     frames = {
         "group": docs.groupBy((F.col("doc_id") % 7).alias("k")).count(),
@@ -258,7 +259,8 @@ def test_tuning_probes_run_no_jobs(spark):
     }
     for name, df in frames.items():
         assert "Exchange" in plan_of(df), name
-        for probe in (_size_bytes, _ensure_parallelism):
+        for probe in (_size_bytes, _ensure_parallelism, _kernel_buckets,
+                      _coalesce_to_waves):
             n = _jobs_run_by(spark, f"probe_{name}_{probe.__name__}",
                              lambda: probe(df))
             assert n == 0, (name, probe.__name__, n)
@@ -269,7 +271,6 @@ def test_tuning_table_pins_parent_values(spark):
     estimate and a missing one (Spark's Long.MaxValue 'unknown')."""
     from geo_sim_processing_a_spark.operators.dedup import (
         _is_big, _kernel_buckets, _size_bytes)
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     known = spark.range(6 << 20)             # 48 MB estimate
     zero = spark.range(0)                    # 0 B: a known empty frame
     missing = spark.createDataFrame([(1,)], "a long")
@@ -277,11 +278,13 @@ def test_tuning_table_pins_parent_values(spark):
     assert _size_bytes(zero) == 0
     assert _size_bytes(missing) == 1 << 50   # unbounded
     assert [_is_big(f) for f in (known, zero, missing)] == [True, False, True]
-    # 48 MB / 4 MB per bucket = 12 buckets, within [p, 4p]; a missing
-    # estimate gets 4 waves.  A 0 estimate is an empty frame: one wave
-    # (the old private probe in simplify_tiles read 0 as unknown, 4p).
-    assert [_kernel_buckets(f) for f in (known, zero, missing)] == [
-        max(p, min(4 * p, 12)), p, 4 * p]
+    # A wave is the cores (4 here), not spark.sql.shuffle.partitions (8).
+    # 48 MB / 4 MB per bucket = 12 buckets, within one to four waves; a
+    # missing estimate gets 4 waves.  A 0 estimate is an empty frame:
+    # one wave (the old private probe in simplify_tiles read 0 as
+    # unknown, 4 waves).
+    assert spark.sparkContext.defaultParallelism == 4
+    assert [_kernel_buckets(f) for f in (known, zero, missing)] == [12, 4, 16]
 
 
 def test_floor_never_lowers_scan_partitions(spark):

@@ -111,6 +111,34 @@ def test_pipeline_end_to_end_and_resume(spark, pages, tmp_path):
     assert dup == 0
 
 
+def test_python_stages_run_one_wave_of_cores(spark, pages, tmp_path, monkeypatch):
+    """Both Python stages of run_pipeline are sized in waves of cores
+    (defaultParallelism 4), not in shuffle partitions (8): a small
+    input runs one wave in the persisted PREP frame and in the
+    simplify_tiles repartition."""
+    import geo_sim_processing_a_spark.plans.pipeline as PL
+    prep, kernel, seen = PL.pages_to_covered_geoms, PL.simplify_tiles, {}
+
+    def covered_fn(*a, **kw):
+        seen["prep_frame"] = prep(*a, **kw)
+        return seen["prep_frame"]
+
+    def kernel_fn(*a, **kw):
+        out = kernel(*a, **kw)
+        # the PREP frame is persisted and materialized by now
+        seen["prep"] = seen["prep_frame"].rdd.getNumPartitions()
+        seen["kernel"] = out.rdd.getNumPartitions()
+        return out
+
+    monkeypatch.setattr(PL, "pages_to_covered_geoms", covered_fn)
+    monkeypatch.setattr(PL, "simplify_tiles", kernel_fn)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 8
+    run_pipeline(spark, pages, str(tmp_path / "run"), res=RES, diameter_tol=TOL)
+    p = spark.sparkContext.defaultParallelism
+    assert p == 4
+    assert (seen["prep"], seen["kernel"]) == (p, p)
+
+
 def test_partial_run_resume_completes(spark, pages, tmp_path):
     """G5.5 — kill after a partial tile set; re-run completes the rest;
     final output equals a single-shot run."""

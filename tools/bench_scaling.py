@@ -133,7 +133,7 @@ treat sub-healthy absolute walls as lower bounds).
 Spark confs (plans/session.py): AQE on with 1m advisory partition
 size (byte-advised coalescing starves CPU-bound kernel stages),
 Arrow batches 10k, shuffle.partitions = cores, kernel buckets =
-4 x shuffle partitions.
+one per ~4 MB of input, one to four waves of cores.
 """)
     print(json.dumps({"low": low, "high": high, "efficiency": round(eff, 4),
                       "dram_gbps_pre": probe_pre,
