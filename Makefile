@@ -1,4 +1,4 @@
-.PHONY: test verify bench bench-ab scaling capacity dist plans lint
+.PHONY: test verify bench bench-ab scaling capacity dist plans lint loc
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
@@ -29,4 +29,8 @@ plans:
 	python tools/dump_plans.py
 
 lint:
-	python -m compileall -q geo_sim_processing_a_spark tests tools jobs bench.py __spark_entry__.py
+	python -m compileall -q geo_sim_processing_a_spark tests tools jobs perfbench bench.py __spark_entry__.py
+
+# total and code-only (no blank/comment/docstring) lines of the package
+loc:
+	python tools/loc.py geo_sim_processing_a_spark

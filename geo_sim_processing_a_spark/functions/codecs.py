@@ -71,8 +71,8 @@ def decode_bmp(blob: bytes) -> np.ndarray:
 
 
 def resize_nearest(rgb: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize, vectorized (the RESIZE stage of the
-    multimodal pipeline)."""
+    """Nearest-neighbor resize, vectorized (the feature thumbnail of
+    multimodal._image_features)."""
     h, w = rgb.shape[:2]
     yi = (np.arange(out_h) * h) // out_h
     xi = (np.arange(out_w) * w) // out_w

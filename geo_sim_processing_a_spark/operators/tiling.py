@@ -27,12 +27,6 @@ from pyspark.sql import functions as F
 from . import cells as C
 
 
-def cover_cells_arrays(xs: np.ndarray, ys: np.ndarray, res: int) -> np.ndarray:
-    """Cells covered by one geometry's bbox at ``res`` (halo set)."""
-    return C.cover_bbox(float(np.min(xs)), float(np.min(ys)),
-                        float(np.max(xs)), float(np.max(ys)), res)
-
-
 def _cover_batch(pdf: pd.DataFrame, res: int) -> pd.DataFrame:
     """Vectorized halo cover of one Arrow batch: per-geometry bbox via
     ``np.minimum.reduceat`` over the concatenated coordinates, cover

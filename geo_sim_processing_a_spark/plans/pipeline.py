@@ -13,6 +13,9 @@ the same keys).
 
 from __future__ import annotations
 
+import json
+import time
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -23,7 +26,7 @@ from ..kernels import reduce_bend as RBK
 from ..kernels.simplify import simplify_feature
 from ..operators import cells as C
 from ..operators.dedup import _coalesce_to_waves, _kernel_buckets
-from ..operators.tiling import salt_by_cell, with_cell_cover
+from ..operators.tiling import salt_by_cell
 from ..sources import manifest as MF
 from ..sources.pages import extract_text_series, synthesize_geoms_pdf
 
@@ -146,8 +149,7 @@ def _flatten_rings(rings: list):
 
 def _reduce_bend_tile(cell, urls, kinds, xs, ys, offsets, owners,
                       diameter_tol: float, smooth: bool, out: dict,
-                      epsilon=WORLD_EPS, flag_del_outer: bool = False,
-                      flag_del_inner: bool = False) -> None:
+                      epsilon=WORLD_EPS) -> None:
     """One (cell, salt) tile over pre-extracted column slices: run
     Sherbend over owned + halo features (multi-ring polygons included,
     matching the reference's RbPolygon ring list,
@@ -156,16 +158,15 @@ def _reduce_bend_tile(cell, urls, kinds, xs, ys, offsets, owners,
     ``epsilon=None`` derives the reference's data-dependent epsilon
     from the tile's own bbox (used by the golden-parity Spark tests);
     the pipeline pins WORLD_EPS so all tiles share one epsilon.
-    Features deleted by flag_del_outer (reference :1638-1662) are
-    matched back by the index carried in Feature.attrs."""
+    Output features are matched back by the index carried in
+    Feature.attrs."""
     feats = []
     for i in range(len(urls)):
         x = np.asarray(xs[i])
         y = np.asarray(ys[i])
         rings = _split_rings(x, y, offsets[i])
         feats.append(RBK.Feature(int(kinds[i]), rings, attrs=i))
-    res = RBK.reduce_bends(feats, diameter_tol, smooth_line=smooth, epsilon=epsilon,
-                           flag_del_outer=flag_del_outer, flag_del_inner=flag_del_inner)
+    res = RBK.reduce_bends(feats, diameter_tol, smooth_line=smooth, epsilon=epsilon)
     n_reduced = int(sum(res.nbr_bend_reduced))
     for fout in res.features:
         i = fout.attrs
@@ -280,12 +281,10 @@ def _run_bucket(pdf: pd.DataFrame, tile_fn) -> pd.DataFrame:
 
 
 def _reduce_bend_kernel(pdf: pd.DataFrame, diameter_tol: float, smooth: bool,
-                        epsilon=WORLD_EPS, flag_del_outer: bool = False,
-                        flag_del_inner: bool = False) -> pd.DataFrame:
+                        epsilon=WORLD_EPS) -> pd.DataFrame:
     return _run_bucket(pdf, lambda c, u, k, x, y, r, o, out:
                        _reduce_bend_tile(c, u, k, x, y, r, o, diameter_tol, smooth, out,
-                                         epsilon=epsilon, flag_del_outer=flag_del_outer,
-                                         flag_del_inner=flag_del_inner))
+                                         epsilon=epsilon))
 
 
 def _dp_kernel(pdf: pd.DataFrame, tolerance: float, method: str) -> pd.DataFrame:
@@ -295,9 +294,7 @@ def _dp_kernel(pdf: pd.DataFrame, tolerance: float, method: str) -> pd.DataFrame
 
 def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
                    kernel: str = "sherbend", smooth: bool = False,
-                   epsilon=WORLD_EPS,
-                   flag_del_outer: bool = False,
-                   flag_del_inner: bool = False) -> DataFrame:
+                   epsilon=WORLD_EPS) -> DataFrame:
     """Per-tile kernels over halo-complete tiles.
 
     Tiles are BUCKETED: one (cell, salt)-hashed partition holds many
@@ -316,9 +313,7 @@ def simplify_tiles(geoms_with_cells: DataFrame, diameter_tol: float = 0.004,
     n_buckets = _kernel_buckets(geoms_with_cells)
     if kernel == "sherbend":
         def bucket_fn(pdf):
-            return _reduce_bend_kernel(pdf, diameter_tol, smooth, epsilon=epsilon,
-                                       flag_del_outer=flag_del_outer,
-                                       flag_del_inner=flag_del_inner)
+            return _reduce_bend_kernel(pdf, diameter_tol, smooth, epsilon=epsilon)
     else:
         def bucket_fn(pdf):
             return _dp_kernel(pdf, diameter_tol, kernel)
@@ -393,16 +388,22 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, out_dir: str,
                  kernel: str = "sherbend", smooth: bool = False,
                  target_rows_per_task: int = 20_000,
                  stage: str = "simplify", epsilon=WORLD_EPS) -> dict:
-    """End-to-end run; resumable via the manifest in out_dir.
-    Returns counters.  ``epsilon=None`` derives the reference's
-    data-dependent epsilon from the global bbox of the actual inputs
-    (one agg pass, R1); the default pins WORLD_EPS because the
-    synthetic geocoder's domain IS the full lon/lat plane."""
-    # fail FAST on a non-epsilon param mismatch — before the expensive
-    # covered materialization (the epsilon part of the fingerprint can
-    # only be checked after resolution below)
-    _precheck_run_params(out_dir, stage, res=res, diameter_tol=diameter_tol,
-                         kernel=kernel, smooth=smooth)
+    """End-to-end run; resumable via the manifest in out_dir, which is
+    the run's one record (sources/manifest.py): it decides which tiles
+    still run, holds the run-parameter fingerprint a resume must match
+    (ValueError otherwise — use a new out_dir or stage), and the
+    returned counters are read from it: ``tiles`` manifest rows of the
+    stage, ``geoms`` their n_features, ``v_in``/``v_out`` their vertex
+    counters, over every attempt so far.  ``epsilon=None`` derives the
+    reference's data-dependent epsilon from the global bbox of the
+    actual inputs (one agg pass, R1); the default pins WORLD_EPS because
+    the synthetic geocoder's domain IS the full lon/lat plane."""
+    params = {"res": res, "diameter_tol": diameter_tol, "kernel": kernel,
+              "smooth": smooth}
+    completed, attempt, recorded = _recorded_run(spark, out_dir, stage)
+    # fail FAST on a non-epsilon mismatch — before the expensive covered
+    # materialization (the epsilon is only known after resolution below)
+    _check_params(recorded, params, out_dir, stage)
     deduped = pages.dropDuplicates(["url"])
     # persisted: reused by the salting count pass and the kernel stage
     # (S4 — the reference's in-memory temp layers, SURVEY.md §2.1)
@@ -411,16 +412,12 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, out_dir: str,
         covered.count()  # materialize once; multiple AQE stages consume it
         if epsilon is None:
             epsilon = derive_epsilon(covered)
-        # params are checked AFTER epsilon resolution so the recorded
-        # fingerprint carries the RESOLVED values — a first run with an
-        # explicit epsilon equal to the derived one no longer mismatches
-        # a later epsilon=None resume (ADVICE r3)
-        _check_run_params(out_dir, stage, res=res, diameter_tol=diameter_tol,
-                          kernel=kernel, smooth=smooth,
-                          epsilon=[epsilon.zero_relative, epsilon.zero_absolute])
-        return _run_pipeline_body(spark, covered, out_dir, res, diameter_tol,
-                                  kernel, smooth, target_rows_per_task,
-                                  stage, epsilon)
+        # the fingerprint carries the RESOLVED epsilon, so an epsilon=None
+        # run and a resume with an explicit equal epsilon match (ADVICE r3)
+        params["epsilon"] = [epsilon.zero_relative, epsilon.zero_absolute]
+        _check_params(recorded, params, out_dir, stage)
+        return _run_pipeline_body(spark, covered, out_dir, stage, params, epsilon,
+                                  target_rows_per_task, completed, attempt)
     finally:
         # release even on failure: a foreachBatch loop calling
         # run_pipeline per micro-batch would otherwise pin one cached
@@ -428,131 +425,50 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, out_dir: str,
         covered.unpersist()
 
 
-def _params_path(out_dir: str, stage: str) -> tuple:
-    """(params-file path, local dir) for the run-parameter guard; RAISES
-    on non-local schemes (the guard uses driver-local file IO — manifest
-    reads themselves go through the Hadoop FS API and support remote
-    schemes)."""
-    import os as _os
+def _recorded_run(spark, out_dir, stage) -> tuple:
+    """(completed tiles or None, next attempt, recorded fingerprint or
+    None) of ``stage`` in one collect over its manifest rows.  A stage
+    whose rows hold more than one fingerprint RAISES: its tiles were
+    computed under different parameters and cannot be resumed."""
+    completed = MF.read_completed(spark, out_dir, stage)
+    if completed is None:
+        return None, 0, None
+    last, fps = completed.agg(F.max("attempt"), F.collect_set("params")).collect()[0]
+    if last is None:  # manifest exists but not for this stage
+        return None, 0, None
+    if len(fps) > 1:
+        raise ValueError(
+            f"run_pipeline: out_dir {out_dir!r} stage {stage!r} holds "
+            f"{len(fps)} run-parameter fingerprints {sorted(fps)} — its "
+            f"tiles mix runs; use a new out_dir or stage")
+    return completed, last + 1, json.loads(fps[0]) if fps else None
 
-    scheme = out_dir.split("://", 1)[0] if "://" in out_dir else ""
-    if scheme not in ("", "file"):
-        raise NotImplementedError(
-            f"run_pipeline: the run-parameter guard uses driver-local file "
-            f"IO and does not support out_dir scheme {scheme!r}; mount the "
-            f"checkpoint dir locally or extend _check_run_params with "
-            f"Hadoop FS atomic-create before using {out_dir!r}")
-    local_dir = out_dir[len("file://"):] if scheme == "file" else out_dir
-    return _os.path.join(local_dir, f"_params_{stage}.json"), local_dir
 
-
-def _precheck_run_params(out_dir: str, stage: str, **non_eps_params) -> None:
-    """Early subset check: if a params file already exists, verify the
-    NON-epsilon parameters match before any heavy work runs (the full
-    fingerprint — including resolved epsilon — is verified/recorded by
-    `_check_run_params` after epsilon resolution).  Never creates the
-    file; silently returns when none exists yet."""
-    import json as _json
-    import os as _os
-
-    path, _ = _params_path(out_dir, stage)
-    if not _os.path.exists(path):
+def _check_params(recorded, params: dict, out_dir, stage) -> None:
+    """Resume safety: a stage's manifest prunes on (stage, cell) only,
+    so resuming with DIFFERENT parameters (kernel, tolerance, res, ...)
+    would silently keep tiles computed under the old ones — or compare
+    incommensurable cell ids across resolutions.  Checks the keys of
+    ``params`` against the stage's recorded fingerprint."""
+    if recorded is None:
         return
-    prev = _json.loads(open(path).read())
-    mismatched = {k: (prev.get(k), v) for k, v in non_eps_params.items()
-                  if prev.get(k) != v}
+    mismatched = {k: (recorded.get(k), v) for k, v in params.items()
+                  if recorded.get(k) != v}
     if mismatched:
         raise ValueError(
             f"run_pipeline: out_dir {out_dir!r} stage {stage!r} was written "
-            f"with different parameters {mismatched} — use a new out_dir or "
-            f"stage")
+            f"with different parameters {mismatched} (recorded, requested) "
+            f"— use a new out_dir or stage")
 
 
-def _check_run_params(out_dir: str, stage: str, **params) -> None:
-    """Resume safety: a stage's manifest prunes on (stage, cell) only,
-    so resuming into the same out_dir/stage with DIFFERENT parameters
-    (kernel, tolerance, res, ...) would silently keep tiles computed
-    under the old ones — or compare incommensurable cell ids across
-    resolutions.  The first run records its parameters; later runs
-    must match or use a fresh out_dir/stage.
-
-    The fingerprint is written to a unique temp file first and then
-    PUBLISHED atomically with os.link (which fails EEXIST if another
-    run won): the loser can only ever read a fully-written winner file,
-    and a crash mid-write leaves no half-written/empty params file to
-    poison later runs (a plain O_CREAT|O_EXCL create-then-write had
-    both of those races).  Uses driver-local file IO, so non-local
-    out_dir schemes RAISE explicitly rather than silently skipping the
-    check (manifest reads themselves go through the Hadoop FS API and
-    do support remote schemes)."""
-    import json as _json
-    import os as _os
-
-    path, local_dir = _params_path(out_dir, stage)
-    fp = _json.dumps(params, sort_keys=True)
-
-    def _verify(prev: str) -> None:
-        if prev == fp:
-            return
-        # legacy compatibility: params files written before the
-        # resolved-epsilon change recorded "epsilon": null for
-        # epsilon=None runs.  The resumed run resolves a concrete
-        # epsilon from the SAME inputs, so a null on disk with every
-        # other key equal is the same run — accept it and upgrade the
-        # file in place (atomic replace) so the resolved value is
-        # pinned from now on (ADVICE r4).
-        try:
-            prev_d = _json.loads(prev)
-        except ValueError:
-            prev_d = None
-        if (isinstance(prev_d, dict) and prev_d.get("epsilon") is None
-                and params.get("epsilon") is not None
-                and {k: v for k, v in prev_d.items() if k != "epsilon"}
-                == {k: v for k, v in params.items() if k != "epsilon"}):
-            tmp2 = f"{path}.tmp.{_os.getpid()}.upgrade"
-            with open(tmp2, "w") as f2:
-                f2.write(fp)
-                f2.flush()
-                _os.fsync(f2.fileno())
-            _os.replace(tmp2, path)
-            return
-        raise ValueError(
-            f"run_pipeline: out_dir {out_dir!r} stage {stage!r} was "
-            f"written with different parameters {prev}; resuming with "
-            f"{fp} would mix results — use a new out_dir or stage")
-
-    _os.makedirs(local_dir, exist_ok=True)
-    if _os.path.exists(path):
-        _verify(open(path).read())
-        return
-    tmp = f"{path}.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(fp)
-        f.flush()
-        _os.fsync(f.fileno())
-    try:
-        _os.link(tmp, path)
-    except FileExistsError:
-        _verify(open(path).read())
-    finally:
-        _os.unlink(tmp)
-
-
-def _run_pipeline_body(spark, covered, out_dir, res, diameter_tol, kernel,
-                       smooth, target_rows_per_task, stage, epsilon) -> dict:
-    completed = MF.read_completed(spark, out_dir, stage)
-    attempt = 0
-    if completed is not None:
-        prev = completed.agg(F.max("attempt")).collect()[0][0]
-        if prev is None:
-            completed = None  # manifest exists but not for this stage
-        else:
-            attempt = prev + 1
+def _run_pipeline_body(spark, covered, out_dir, stage, params, epsilon,
+                       target_rows_per_task, completed=None, attempt=0) -> dict:
+    kernel = params["kernel"]
     todo = MF.prune_completed(covered, completed, tile_col="cell")
-
     salted = salt_by_cell(todo, key_col="url", cell_col="cell",
                           target_rows_per_task=target_rows_per_task)
-    result = simplify_tiles(salted, diameter_tol, kernel, smooth, epsilon=epsilon)
+    result = simplify_tiles(salted, params["diameter_tol"], kernel, params["smooth"],
+                            epsilon=epsilon)
     # idempotent per-attempt output dir: a re-run of the same attempt
     # overwrites rather than duplicating (S7 "latest complete attempt")
     # within-partition sort by cell: parquet row groups become
@@ -565,7 +481,6 @@ def _run_pipeline_body(spark, covered, out_dir, res, diameter_tol, kernel,
     # DataFrame (distributed groupBy + write; the per-tile rows never
     # round-trip through the driver — at res 12 there can be 16.7M
     # tiles and a driver-side collect would be the bottleneck)
-    import time as _time
     new_data = spark.read.parquet(f"{out_dir}/data/stage={stage}/attempt={attempt}")
     # Sherbend counters are per-(cell, salt) SUBGROUP totals replicated
     # onto each of the subgroup's rows: take one value per subgroup,
@@ -597,15 +512,16 @@ def _run_pipeline_body(spark, covered, out_dir, res, diameter_tol, kernel,
                    F.lit(attempt).cast("int").alias("attempt"),
                    F.col("n_features").cast("long"),
                    "counters",
-                   F.lit(float(_time.time())).alias("ts")))
+                   F.lit(json.dumps(params, sort_keys=True)).alias("params"),
+                   F.lit(float(time.time())).alias("ts")))
     MF.append_manifest(mdf, out_dir)
 
-    # stats for THIS stage only (out_dir may host several stages)
-    written = (spark.read.option("basePath", f"{out_dir}/data")
-               .parquet(f"{out_dir}/data/stage={stage}"))
-    agg = written.agg(F.count("*").alias("geoms"),
-                      F.countDistinct("cell").alias("tiles"),
-                      F.sum("n_in").alias("v_in"),
-                      F.sum("n_out").alias("v_out")).collect()[0]
-    return {"geoms": agg["geoms"], "tiles": agg["tiles"],
-            "v_in": int(agg["v_in"] or 0), "v_out": int(agg["v_out"] or 0)}
+    # stats for THIS stage only (out_dir may host several stages), from
+    # its manifest rows: one per tile, across every attempt
+    rows = spark.read.parquet(MF.manifest_path(out_dir)).where(F.col("stage") == stage)
+    vertices = [F.sum(F.get_json_object("counters", f"$.{k}").cast("long"))
+                for k in ("v_in", "v_out")]
+    tiles, geoms, v_in, v_out = rows.agg(F.count("*"), F.sum("n_features"),
+                                         *vertices).collect()[0]
+    return {"geoms": int(geoms or 0), "tiles": tiles,
+            "v_in": int(v_in or 0), "v_out": int(v_out or 0)}

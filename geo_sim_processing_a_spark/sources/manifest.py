@@ -1,13 +1,26 @@
 """Checkpoint / lineage manifest — resumable batch runs (SURVEY.md S7).
 
-Iceberg is unavailable in-sandbox (no runtime jar, no network), so the
-manifest is a parquet directory implementing the same semantics:
+The manifest is the run's one record: which tiles still run, the
+run-parameter fingerprint a resume must match, and the counters
+run_pipeline returns are all read from it; nothing else is written
+beside the data.  With no Iceberg runtime jar on the classpath, the
+manifest is a parquet directory implementing the same semantics, one
+row per completed (stage, tile):
 
- - each completed unit of work APPENDS one row
-   (stage, tile, attempt, n_features, counters_json, ts); re-runs may
-   append duplicate (stage, tile) rows — readers resolve them
-   (read_completed takes max(attempt); prune_completed distincts), so
-   the manifest is append-only-with-dedup-on-read, like an Iceberg
+  stage       string  pipeline stage (one out_dir may hold several)
+  tile        long    cell id
+  attempt     int     the attempt that computed the tile (0, 1, ...)
+  n_features  long    output rows of the tile
+  counters    string  JSON: n_bend_reduced, n_hole_del, n_line_smooth,
+                      n_pass, n_pol_del, v_in, v_out
+  params      string  JSON run-parameter fingerprint (res, diameter_tol,
+                      kernel, smooth, resolved epsilon; sort_keys) — the
+                      same on every row of a stage
+  ts          double  append time (unix seconds)
+
+ - each attempt APPENDS the rows of the tiles it computed; a recorded
+   tile is pruned from every later attempt, so a (stage, tile) pair
+   has exactly one row — the manifest is append-only like an Iceberg
    manifest list, not overwrite-in-place;
  - on restart, completed (stage, tile) pairs are read and the work
    DataFrame is pruned with a broadcast left_anti join — only missing
@@ -67,16 +80,15 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def read_completed(spark: SparkSession, base_dir: str, stage: str) -> DataFrame | None:
-    """None means 'no manifest yet' — ONLY the path-missing case.  A
-    manifest that exists but cannot be read (corrupt file, transient FS
-    error) RAISES: silently returning None would discard all resume
-    state and re-run every tile on top of the masked error."""
+    """The manifest rows of ``stage``: one per completed tile.  None
+    means 'no manifest yet' — ONLY the path-missing case.  A manifest
+    that exists but cannot be read (corrupt file, transient FS error)
+    RAISES: silently returning None would discard all resume state and
+    re-run every tile on top of the masked error."""
     path = manifest_path(base_dir)
     if not fs_exists(spark, path):
         return None
-    mf = spark.read.parquet(path)
-    return (mf.where(F.col("stage") == stage)
-              .groupBy("tile").agg(F.max("attempt").alias("attempt")))
+    return spark.read.parquet(path).where(F.col("stage") == stage)
 
 
 def prune_completed(work: DataFrame, completed: DataFrame | None,

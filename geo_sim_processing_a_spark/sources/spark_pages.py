@@ -25,7 +25,3 @@ def build_pages(spark: SparkSession, n_rows: int, partitions: int | None = None)
 
     return base.mapInPandas(gen, PAGES_SCHEMA)
 
-
-def write_pages_parquet(spark: SparkSession, n_rows: int, path: str,
-                        partitions: int | None = None) -> None:
-    build_pages(spark, n_rows, partitions).write.mode("overwrite").parquet(path)

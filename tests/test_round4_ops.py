@@ -1,7 +1,7 @@
 """Round-4 behaviors: wider SimHash radius (8x8-bit bands, Hamming<=7),
 hash-sampled IVF quantizer (no first-N-by-id bias), connected-components
-checkpoint cadence + empirical O(log n) round bound, run-params race
-hardening, and the lazy frequency_cap variant."""
+checkpoint cadence + empirical O(log n) round bound, and the lazy
+frequency_cap variant."""
 
 import math
 import os
@@ -142,32 +142,6 @@ def test_cc_checkpoint_every_validation(spark):
                                   "id_a long, id_b long")
     with pytest.raises(ValueError, match="checkpoint_every"):
         connected_components(edges, checkpoint_every=0)
-
-
-# ---------------------------------------------------------------------------
-# run-params guard: O_EXCL create, EEXIST verify, non-local scheme raises
-# ---------------------------------------------------------------------------
-
-def test_check_run_params_excl_and_mismatch(tmp_path):
-    from geo_sim_processing_a_spark.plans.pipeline import _check_run_params
-
-    out = str(tmp_path / "run")
-    _check_run_params(out, "s1", res=6, tol=0.004)
-    # identical params: fine (the EEXIST re-read path)
-    _check_run_params(out, "s1", res=6, tol=0.004)
-    with pytest.raises(ValueError, match="different parameters"):
-        _check_run_params(out, "s1", res=7, tol=0.004)
-    # a different stage is independent
-    _check_run_params(out, "s2", res=7, tol=0.004)
-    # file: scheme maps to the same local path
-    _check_run_params(f"file://{out}", "s1", res=6, tol=0.004)
-
-
-def test_check_run_params_rejects_remote_scheme(tmp_path):
-    from geo_sim_processing_a_spark.plans.pipeline import _check_run_params
-
-    with pytest.raises(NotImplementedError, match="s3a"):
-        _check_run_params("s3a://bucket/run", "s1", res=6)
 
 
 def test_fs_exists_local(spark, tmp_path):

@@ -1,6 +1,5 @@
 """Round-5 regression tests: ADVICE r4 fixes (hypertable state
-migration, Hadoop-FS stream marker, epsilon-null params upgrade,
-hole-in-hole repair semantics) and the pinned golden-oracle layer."""
+migration, Hadoop-FS stream marker, hole-in-hole repair semantics) and the pinned golden-oracle layer."""
 
 import json
 import os
@@ -75,33 +74,6 @@ def test_stream_marker_via_hadoop_fs(spark, tmp_path):
     assert (ckpt / "_pipeline_stream_id").read_text() == "sid42"
     assert fs_read_text(spark, marker_uri) == "sid42"
     assert not os.path.exists("./file:")
-
-
-# ---------------------------------------------------------------------------
-# params-file epsilon-null upgrade (ADVICE r4 #4)
-# ---------------------------------------------------------------------------
-
-def test_params_epsilon_null_upgrade(tmp_path):
-    """A pre-existing params file with "epsilon": null (written before
-    resolved-epsilon recording) must be accepted when every other key
-    matches, and upgraded in place with the resolved value."""
-    from geo_sim_processing_a_spark.plans.pipeline import _check_run_params
-    out = str(tmp_path / "run")
-    os.makedirs(out)
-    legacy = {"res": 6, "diameter_tol": 0.004, "kernel": "sherbend",
-              "smooth": False, "epsilon": None}
-    path = os.path.join(out, "_params_simplify.json")
-    with open(path, "w") as f:
-        f.write(json.dumps(legacy, sort_keys=True))
-    resolved = dict(legacy, epsilon=[1e-12, 1e-13])
-    _check_run_params(out, "simplify", **resolved)  # must not raise
-    stored = json.loads(open(path).read())
-    assert stored["epsilon"] == [1e-12, 1e-13]      # upgraded in place
-    # and a REAL mismatch still raises (other key differs)
-    with pytest.raises(ValueError):
-        _check_run_params(out, "simplify", **dict(resolved, res=7))
-    # re-resume with the now-recorded resolved epsilon: fine
-    _check_run_params(out, "simplify", **resolved)
 
 
 # ---------------------------------------------------------------------------

@@ -2,14 +2,16 @@
 the flagship pipeline, salting exactness (G5.4), resume (G5.5),
 and Spark-vs-local kernel parity (FIXTURES.md §5.2.1)."""
 
+import glob
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from geo_sim_processing_a_spark.plans.pipeline import (
-    _reduce_bend_kernel, extracted_text_parity, pages_to_geoms, run_pipeline,
-    simplify_tiles)
+    WORLD_EPS, _reduce_bend_kernel, extracted_text_parity, pages_to_geoms,
+    run_pipeline, simplify_tiles)
 from geo_sim_processing_a_spark.operators.tiling import (
     raster_tile_assign, salt_by_cell, with_cell_cover)
 from geo_sim_processing_a_spark.sources.spark_pages import build_pages
@@ -89,10 +91,20 @@ def test_spark_kernel_matches_local(spark, pages):
     covered.unpersist()
 
 
+def _data_stats(spark, out, stage="simplify"):
+    """run_pipeline's stats as defined over the written data of the
+    stage (every attempt); run_pipeline reads them from the manifest."""
+    row = (spark.read.option("basePath", f"{out}/data").parquet(f"{out}/data/stage={stage}")
+           .agg(F.count("*"), F.countDistinct("cell"), F.sum("n_in"), F.sum("n_out"))
+           .collect()[0])
+    return {"geoms": row[0], "tiles": row[1], "v_in": row[2], "v_out": row[3]}
+
+
 def test_pipeline_end_to_end_and_resume(spark, pages, tmp_path):
     out = str(tmp_path / "run1")
     stats1 = run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL)
     assert stats1["geoms"] > 0 and stats1["tiles"] > 0
+    assert stats1 == _data_stats(spark, out)
     assert stats1["v_out"] <= stats1["v_in"]
 
     # manifest exists, one row per tile
@@ -104,7 +116,7 @@ def test_pipeline_end_to_end_and_resume(spark, pages, tmp_path):
     stats2 = run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL)
     data2 = _collect_output(spark.read.option("basePath", f"{out}/data").parquet(f"{out}/data"))
     assert data1 == data2
-    assert stats2["tiles"] == stats1["tiles"]
+    assert stats2 == stats1 == _data_stats(spark, out)
     mf2 = spark.read.parquet(f"{out}/_manifest")
     # each (stage, tile) completed exactly once
     dup = (mf2.groupBy("stage", "tile").count().where("count > 1")).count()
@@ -144,15 +156,19 @@ def test_partial_run_resume_completes(spark, pages, tmp_path):
     final output equals a single-shot run."""
     out_full = str(tmp_path / "full")
     out_part = str(tmp_path / "part")
-    run_pipeline(spark, pages, out_full, res=RES, diameter_tol=TOL)
+    stats_full = run_pipeline(spark, pages, out_full, res=RES, diameter_tol=TOL)
+    assert stats_full == _data_stats(spark, out_full)
     full = _collect_output(spark.read.option("basePath", f"{out_full}/data")
                            .parquet(f"{out_full}/data"))
 
     # simulate an interrupted run: only pages with even doc id
     part_pages = pages.where(F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long") % 2 == 0)
-    run_pipeline(spark, part_pages, out_part, res=RES, diameter_tol=TOL)
+    stats_part = run_pipeline(spark, part_pages, out_part, res=RES, diameter_tol=TOL)
+    assert stats_part == _data_stats(spark, out_part)
     # now resume with the complete input
-    run_pipeline(spark, pages, out_part, res=RES, diameter_tol=TOL)
+    stats_resumed = run_pipeline(spark, pages, out_part, res=RES, diameter_tol=TOL)
+    assert stats_resumed == _data_stats(spark, out_part)
+    assert stats_resumed["tiles"] == stats_full["tiles"] > stats_part["tiles"]
     resumed = _collect_output(spark.read.option("basePath", f"{out_part}/data")
                               .parquet(f"{out_part}/data"))
     # completed tiles are never recomputed; tiles from the partial run
@@ -195,8 +211,7 @@ def test_manifest_sums_dp_hole_counters(spark, tmp_path):
     first() of the per-feature values."""
     import json
 
-    from geo_sim_processing_a_spark.plans.pipeline import (
-        WORLD_EPS, _run_pipeline_body)
+    from geo_sim_processing_a_spark.plans.pipeline import _run_pipeline_body
     from geo_sim_processing_a_spark.sources import manifest as MF
 
     def polygon(x0):
@@ -216,9 +231,90 @@ def test_manifest_sums_dp_hole_counters(spark, tmp_path):
         "ys array<double>, ring_offsets array<int>")
     covered = with_cell_cover(geoms, RES)
     out = str(tmp_path / "run")
-    got = _run_pipeline_body(spark, covered, out, RES, 0.1, "dp", False,
-                             20_000, "simplify", WORLD_EPS)
+    params = {"res": RES, "diameter_tol": 0.1, "kernel": "dp", "smooth": False,
+              "epsilon": [WORLD_EPS.zero_relative, WORLD_EPS.zero_absolute]}
+    got = _run_pipeline_body(spark, covered, out, "simplify", params, WORLD_EPS, 20_000)
     assert got["geoms"] == 2
     rows = spark.read.parquet(MF.manifest_path(out)).collect()
     assert len(rows) == 1  # both polygons are owned by one tile
     assert json.loads(rows[0]["counters"])["n_hole_del"] == 2
+
+
+# ---------------------------------------------------------------------------
+# resume guard: the run-parameter fingerprint recorded in the manifest
+# ---------------------------------------------------------------------------
+
+def _fail_prep(monkeypatch):
+    import geo_sim_processing_a_spark.plans.pipeline as PL
+
+    def prep(*a, **kw):
+        raise AssertionError("PREP ran before the parameter check")
+
+    monkeypatch.setattr(PL, "pages_to_covered_geoms", prep)
+
+
+def test_resume_with_other_params_raises_before_prep(spark, pages, tmp_path, monkeypatch):
+    """A resume with a different res, kernel or diameter_tol raises
+    before PREP runs — also through a file:// URI of the same out_dir;
+    a second stage in the same out_dir is independent."""
+    import json
+
+    out = str(tmp_path / "run")
+    run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL)
+    assert not glob.glob(f"{out}/_params_*")
+    rows = spark.read.parquet(f"{out}/_manifest").select("params").distinct().collect()
+    assert [json.loads(r[0]) for r in rows] == [
+        {"res": RES, "diameter_tol": TOL, "kernel": "sherbend", "smooth": False,
+         "epsilon": [WORLD_EPS.zero_relative, WORLD_EPS.zero_absolute]}]
+
+    with monkeypatch.context() as m:
+        _fail_prep(m)
+        for changed in ({"res": RES + 1}, {"kernel": "dp"}, {"diameter_tol": 2 * TOL}):
+            kw = dict({"res": RES, "diameter_tol": TOL}, **changed)
+            with pytest.raises(ValueError, match="different parameters"):
+                run_pipeline(spark, pages, out, **kw)
+            with pytest.raises(ValueError, match="different parameters"):
+                run_pipeline(spark, pages, f"file://{out}", **kw)
+
+    stats = run_pipeline(spark, pages, f"file://{out}", res=RES + 1,
+                         diameter_tol=TOL, stage="other")
+    assert stats == _data_stats(spark, out, stage="other")
+    mf = spark.read.parquet(f"{out}/_manifest")
+    assert mf.select("stage", "params").distinct().count() == 2
+
+
+def test_resume_checks_the_resolved_epsilon(spark, pages, tmp_path):
+    """The fingerprint records the resolved epsilon: an epsilon=None run
+    resumes with an explicit equal epsilon (ADVICE r3); a different
+    epsilon raises."""
+    from geo_sim_processing_a_spark.geom.epsilon import Epsilon
+    from geo_sim_processing_a_spark.plans.pipeline import (
+        derive_epsilon, pages_to_covered_geoms)
+
+    out = str(tmp_path / "run")
+    first = run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL, epsilon=None)
+    derived = derive_epsilon(pages_to_covered_geoms(pages.dropDuplicates(["url"]), RES))
+    again = run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL, epsilon=derived)
+    assert again == first
+    other = Epsilon((0.0, 0.0, 1.0, 1.0))
+    assert other.zero_relative != derived.zero_relative
+    with pytest.raises(ValueError, match="epsilon"):
+        run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL, epsilon=other)
+
+
+def test_stage_with_two_fingerprints_raises(spark, pages, tmp_path, monkeypatch):
+    """A stage whose manifest rows hold two fingerprints cannot be
+    resumed, whichever of them the resume matches."""
+    from geo_sim_processing_a_spark.sources import manifest as MF
+
+    out = str(tmp_path / "run")
+    run_pipeline(spark, pages, out, res=RES, diameter_tol=TOL)
+    mf = spark.read.parquet(f"{out}/_manifest")
+    stray = (mf.limit(1).withColumn("tile", F.lit(-1).cast("long"))
+             .withColumn("params", F.regexp_replace("params", '"res": 6', '"res": 7')))
+    MF.append_manifest(stray.localCheckpoint(), out)
+    with monkeypatch.context() as m:
+        _fail_prep(m)
+        for res in (RES, RES + 1):
+            with pytest.raises(ValueError, match="2 run-parameter fingerprints"):
+                run_pipeline(spark, pages, out, res=res, diameter_tol=TOL)
